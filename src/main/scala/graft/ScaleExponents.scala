@@ -79,6 +79,16 @@ object ScaleExponents {
 
     val tiers = Seq(("1x", srcDir), ("10x", "target/sf1"),
       ("100x", "target/sf10"))
+    // the scale targets: the three heavy shared stages, plus the
+    // corpus-scaling half of the IVF-PQ twins — the QUERY rows read
+    // the warm candidate checkpoint (flat at any scale — that is the
+    // design), so the scaling evidence must come from this stage's
+    // fresh rebuild (codebook/codes memos stay warm across reps: the
+    // row isolates the coarse-assign -> probe -> ADC part)
+    import graft.queries.ExtensionQueries.stageDef
+    val shingles = stageDef("shingle_pairs")
+    val stages = Seq(stageDef("cc_labels"), stageDef("pr_graph"),
+      shingles, stageDef("ivfpq_adc20"))
     val queries = Seq("dedup_substring", "curate_pretrain",
       "dedup_ngram_jaccard", "graph_pagerank",
       // round-14 touched operators: the Bloom literal fold + staged
@@ -123,19 +133,17 @@ object ScaleExponents {
       Double, Double, Double, Double, Long, Long, Long)]
 
     for ((tier, dir) <- tiers) {
-      val stages = graft.queries.ExtensionQueries
-        .scaleTargetStages(spark, dir)
-      for ((name, build) <- stages) {
+      for (stage <- stages) {
         var rows = 0L
         val ts = (1 to reps).map { _ =>
-          graft.ext.Stages.evict(spark, s"$dir|$name")
+          stage.evict(spark, dir)
           val t0 = System.nanoTime()
-          rows = build().count()
+          rows = stage(spark, dir).count()
           (System.nanoTime() - t0) / 1e9
         }
-        println(f"[scale] $tier%-5s stage $name%-14s " +
+        println(f"[scale] $tier%-5s stage ${stage.name}%-14s " +
           f"${ts.map(t => f"$t%.2f").mkString("/")} s rows=$rows")
-        put(s"stage $name", tier, ts, rows)
+        put(s"stage ${stage.name}", tier, ts, rows)
       }
       // queries run against BUILT stages (the bench protocol): the
       // stage builds above leave the memo warm for the finishes.
@@ -196,14 +204,11 @@ object ScaleExponents {
       // historical 2.2x spread was recorded at), with telemetry
       if (tier == "10x") {
         for (run <- 1 to probeRuns) {
-          graft.ext.Stages.evict(spark, s"$dir|shingle_pairs")
+          shingles.evict(spark, dir)
           Thread.sleep(1000) // drain listener bus before reset
           probe.reset()
           val t0 = System.nanoTime()
-          val rows = graft.queries.ExtensionQueries
-            .scaleTargetStages(spark, dir)
-            .collectFirst { case ("shingle_pairs", b) => b }.get
-            .apply().count()
+          val rows = shingles(spark, dir).count()
           val wall = (System.nanoTime() - t0) / 1e9
           Thread.sleep(1000) // let async task-end events land
           val (n, sum, max, p50, gc, sr, sw) = probe.snapshot

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Train-once / consume-many stage cache — the engine surface behind
   * shared pipeline artifacts (near-dup component labels, ANN
@@ -19,16 +20,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     for (session, name), running `build` at most once. A CHANGED
   *     fingerprint (the caller's hash of the input data — e.g.
   *     [[graft.sources.Tables.fingerprint]] of the backing file)
-  *     atomically swaps in a rebuilt entry and unpersists the stale
+  *     atomically swaps in a rebuilt entry and releases the stale
   *     checkpoint, so a regenerated input replaces rather than leaks.
   *     Callers that fetched the OLD frame just before the swap lose
   *     it (localCheckpoints have no lineage to recompute) —
   *     regenerating inputs while queries over them are in flight is
   *     unsupported.
-  *   - `evict(s, name)` drops the entry (and unpersists its
-  *     checkpoint) so the next `stage` call rebuilds — the hook a
-  *     benchmark uses to time rebuilds, and an operator uses when the
-  *     input is known-stale.
+  *   - `evict(s, name)` drops the entry so the next `stage` call
+  *     rebuilds — the hook a benchmark uses to time rebuilds, and an
+  *     operator uses when the input is known-stale. Eviction frees
+  *     the stage's own checkpoint blocks at once (the RDD behind the
+  *     frame's `LogicalRDD` is unpersisted; `Dataset.unpersist` would
+  *     only touch the CacheManager, which a checkpoint never enters).
+  *     Intermediate checkpoints a build made for itself are not
+  *     tracked here; they go when the ContextCleaner collects them.
   *   - Entries whose SparkContext has stopped are swept on every
   *     call, so a long-lived JVM running several sessions does not
   *     accrete dead checkpointed frames.
@@ -41,11 +46,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stage's concurrent callers serialize on its cell and all receive
   * the same frame.
   *
-  * Cluster note: `localCheckpoint` blocks live on executors —
-  * right for shared read-mostly artifacts, but a lost executor loses
-  * its blocks (no lineage). For fault-critical stages on a real
-  * cluster, persist the artifact to reliable storage instead and
-  * read it back; this cache is the in-session tier.
+  * `localCheckpoint` blocks live on executors — right for shared
+  * read-mostly artifacts, but a lost executor loses its blocks (no
+  * lineage); this cache is an in-session tier only.
   */
 object Stages {
 
@@ -54,168 +57,50 @@ object Stages {
       build: () => DataFrame) {
     private var computed: DataFrame = _
     def df: DataFrame = synchronized {
-      if (computed == null) computed = build()
+      if (computed == null) computed = build().localCheckpoint(true)
       computed
     }
-    /** The frame iff the build already ran — eviction must not force
-      * a multi-job build just to unpersist its result. */
-    def forced: Option[DataFrame] = synchronized(Option(computed))
+    /** Unpersists the checkpoint iff the build already ran — eviction
+      * must not force a multi-job build just to free its result — and
+      * the context still runs.
+      */
+    def release(): Unit = synchronized {
+      if (computed != null && !sc.isStopped)
+        computed.queryExecution.logical.foreach {
+          case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+          case _ => ()
+        }
+    }
   }
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, StageCell]()
 
-  private def dropQuietly(cell: StageCell): Unit =
-    cell.forced.foreach(d =>
-      try d.unpersist() catch { case _: Throwable => () })
-
   private def keyOf(s: SparkSession, name: String): String =
     s"${s.sparkContext.applicationId}|$name"
-
-  // -- Disk tier ------------------------------------------------------
-  // Opt-in via the `graft.stage.dir` system property (Bench/Verify set
-  // it to target/stages/<sf>): stage artifacts additionally persist as
-  // parquet under <root>/<name>__fp<hex>, so a NEW process (the next
-  // bench round, a verify run) pays only a parquet read instead of the
-  // whole build. Invalidation stays fingerprint-driven — a regenerated
-  // fixture hashes to a new directory name and the stale sibling is
-  // deleted before the rebuilt artifact is published (tmp-dir write +
-  // atomic rename, so a concurrent process never reads a half-written
-  // stage). This is the "reliable storage" tier the cluster note below
-  // calls for: on a real cluster the root would be object storage and
-  // a lost executor costs nothing (the artifact has no lineage to
-  // lose, it is re-read).
-
-  private def diskRoot: Option[String] =
-    sys.props.get("graft.stage.dir").map(_.trim).filter(_.nonEmpty)
-
-  /** Code stamp folded into every disk key: the newest .class mtime
-    * under this library's code source (or the jar's own mtime). The
-    * fixture fingerprint alone cannot see a CODE change to a stage
-    * build — without this, editing an algorithm would keep serving
-    * the artifact the OLD code wrote. Any recompile invalidates
-    * (conservative — rebuild cost is a few seconds once per build),
-    * while every process of one build (verify, bench, its reps)
-    * still shares warm artifacts.
-    */
-  private lazy val codeStamp: Long =
-    try {
-      val src = classOf[StageCell].getProtectionDomain.getCodeSource
-      val loc = java.nio.file.Paths.get(src.getLocation.toURI)
-      if (java.nio.file.Files.isDirectory(loc)) {
-        val s = java.nio.file.Files.walk(loc)
-        try s.filter(p => p.toString.endsWith(".class"))
-          .mapToLong(p => p.toFile.lastModified()).max().orElse(0L)
-        finally s.close()
-      } else loc.toFile.lastModified()
-    } catch { case _: Throwable => 0L }
-
-  private def sanitize(name: String): String =
-    name.map(c => if (c.isLetterOrDigit || c == '.' || c == '-') c else '_')
-
-  private def deleteTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
-    f.delete(): Unit
-  }
-
-  /** Build the stage frame, persisting through the disk tier when
-    * enabled. Runs inside the cell's lock (same as the plain build).
-    * Any disk-tier failure falls back to the in-memory contract — a
-    * full filesystem or permission problem must degrade to round-7
-    * behavior, not fail the query.
-    */
-  private def materialize(s: SparkSession, name: String, fp: Long,
-                          build: () => DataFrame): DataFrame =
-    diskRoot match {
-      case None => build().localCheckpoint(true)
-      case Some(root) =>
-        try {
-          val dirName = s"${sanitize(name)}__fp${
-            java.lang.Long.toHexString(fp * 31L + codeStamp)}"
-          val dir = new java.io.File(root, dirName)
-          // reclaim crashed runs' tmp dirs EVEN when the artifact is
-          // already published (the Staging.publishOnce lesson): the
-          // stale-fingerprint sweep below only runs on the build
-          // path, so a remnant behind a published _SUCCESS would
-          // otherwise leak a partial corpus copy forever. Shared
-          // sweep = shared liveness/pid-recycling rules.
-          graft.sources.Staging.sweepDeadTmpMatching(
-            new java.io.File(root),
-            ("^" + java.util.regex.Pattern.quote(sanitize(name)) +
-              """__fp[0-9a-f]+\.tmp-(\d+)--?\d+$""").r)
-          if (!new java.io.File(dir, "_SUCCESS").isFile) {
-            val built = build()
-            // a regenerated fixture must not leak its predecessor's
-            // artifact: drop stale fingerprints of this stage first
-            Option(new java.io.File(root).listFiles())
-              .getOrElse(Array.empty)
-              .filter(f => f.getName.startsWith(sanitize(name) + "__fp")
-                && f.getName != dirName)
-              .foreach(deleteTree)
-            val tmp = new java.io.File(root,
-              s"$dirName.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-            // any failure between here and the move must not leak the
-            // tmp dir: the stale-fingerprint sweep above only matches
-            // published names, so an orphaned .tmp-* would otherwise
-            // accumulate a partial corpus-sized copy per failed run
-            try {
-              graft.sources.ParquetSink.write(built, tmp.getPath,
-                Seq.empty, built(built.columns.head), buckets = 4)
-              try
-                java.nio.file.Files.move(tmp.toPath, dir.toPath,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              catch {
-                // lost a publish race to another process: its artifact
-                // is equivalent (same fingerprint) — keep it, drop ours
-                case _: java.nio.file.FileSystemException
-                    if new java.io.File(dir, "_SUCCESS").isFile =>
-                  deleteTree(tmp)
-              }
-            } catch {
-              case e: Throwable =>
-                try deleteTree(tmp) catch { case _: Throwable => () }
-                throw e
-            }
-          }
-          s.read.parquet(dir.getPath)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[stages] disk tier failed for $name " +
-              s"(${e.getClass.getSimpleName}: ${Option(e.getMessage)
-                .getOrElse("").takeWhile(_ != '\n').take(120)}); " +
-              "falling back to localCheckpoint")
-            build().localCheckpoint(true)
-        }
-    }
 
   /** The memoized frame for (session, `name`); `build` runs at most
     * once per fingerprint. See the object scaladoc for the contract.
     */
   def stage(s: SparkSession, name: String, fingerprint: Long = 0L)
            (build: => DataFrame): DataFrame = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.sc.isStopped) { dropQuietly(e.getValue); it.remove() }
-    }
+    cache.values().removeIf(_.sc.isStopped): Unit
     val key = keyOf(s, name)
-    val fresh = new StageCell(fingerprint, s.sparkContext,
-      () => materialize(s, name, fingerprint, () => build))
+    val fresh = new StageCell(fingerprint, s.sparkContext, () => build)
     var cell = cache.putIfAbsent(key, fresh)
     if (cell == null) cell = fresh
     else if (cell.fp != fingerprint) {
-      // stale input: swap in the fresh cell, drop the old checkpoint
+      // stale input: swap in the fresh cell, free the old checkpoint
       cell = if (cache.replace(key, cell, fresh)) {
-        dropQuietly(cell); fresh
+        cell.release(); fresh
       } else cache.getOrDefault(key, fresh) // lost a race: reuse winner
     }
     cell.df
   }
 
-  /** Drop (and unpersist) the stage; the next [[stage]] call
+  /** Drop the stage and free its checkpoint; the next [[stage]] call
     * rebuilds. No-op if absent.
     */
   def evict(s: SparkSession, name: String): Unit =
-    Option(cache.remove(keyOf(s, name))).foreach(dropQuietly)
+    Option(cache.remove(keyOf(s, name))).foreach(_.release())
 }

@@ -35,18 +35,10 @@ object ExtensionQueries {
   private[graft] def evictStages(s: SparkSession, dir: String): Unit =
     ExtensionSupport.evictStages(s, dir)
 
-  /** See [[ExtensionSupport.stageThunks]]. */
-  private[graft] def stageThunks(s: SparkSession, dir: String)
-      : Seq[(String, () => org.apache.spark.sql.DataFrame)] =
-    ExtensionSupport.stageThunks(s, dir)
+  /** See [[ExtensionSupport.stageTable]]. */
+  private[graft] def stageTable: Seq[StageDef] = ExtensionSupport.stageTable
 
-  /** See [[ExtensionSupport.stageRawFrames]]. */
-  private[graft] def stageRawFrames(s: SparkSession, dir: String)
-      : Seq[(String, () => org.apache.spark.sql.DataFrame)] =
-    ExtensionSupport.stageRawFrames(s, dir)
-
-  /** See [[ExtensionSupport.scaleTargetStages]]. */
-  private[graft] def scaleTargetStages(s: SparkSession, dir: String)
-      : Seq[(String, () => org.apache.spark.sql.DataFrame)] =
-    ExtensionSupport.scaleTargetStages(s, dir)
+  /** See [[ExtensionSupport.stageDef]]. */
+  private[graft] def stageDef(name: String): StageDef =
+    ExtensionSupport.stageDef(name)
 }

@@ -6,13 +6,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc STAGE-build probe with task telemetry — the shared-stage
-  * twin of [[QProbe]] (which times queries): fresh-builds a named
-  * stage at each given dir, reporting wall, task count, summed task
-  * time, max task, GC, and shuffle bytes per rep. Exists to separate
-  * WALL artifacts (AQE partition coalescing under-filling threads on
-  * small tiers, scheduler/GC weather) from WORK growth when a
-  * SF10_SMOKE.md cell looks anomalous — wall moving while summed
-  * task time and shuffle bytes hold is idle threads, not extra work.
+  * twin of [[QProbe]] (which times queries): fresh-builds any stage
+  * of the stage table by name at each given dir, reporting wall,
+  * task count, summed task time, max task, GC, and shuffle bytes per
+  * rep; with GRAFT_PROBE_EXPLAIN=1 it first prints the stage's raw
+  * build plan (the memoized frame would explain as the checkpoint
+  * scan). Exists to separate WALL artifacts (AQE partition
+  * coalescing under-filling threads on small tiers, scheduler/GC
+  * weather) from WORK growth when a SF10_SMOKE.md cell looks
+  * anomalous — wall moving while summed task time and shuffle bytes
+  * hold is idle threads, not extra work.
   *
   * `runMain graft.tools.StageProbe <stage> <reps> <dir1,dir2,...>`
   * Dev-loop tool only; official figures come from [[graft.Bench]] /
@@ -21,7 +24,9 @@ import org.apache.spark.sql.SparkSession
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
-    val stageName = args.lift(0).getOrElse("ivfpq_adc20")
+    val stage = graft.queries.ExtensionQueries.stageDef(
+      args.lift(0).getOrElse(sys.error(
+        "usage: StageProbe <stage> <reps> <dir1,dir2,...>")))
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val dirs = args.lift(2).map(_.split(',').toSeq)
       .getOrElse(Seq("target/sf1", "target/sf10"))
@@ -50,24 +55,21 @@ object StageProbe {
     }
     spark.sparkContext.addSparkListener(probe)
     for (dir <- dirs) {
-      val build = graft.queries.ExtensionQueries
-        .scaleTargetStages(spark, dir)
-        .collectFirst { case (`stageName`, b) => b }
-        .getOrElse(sys.error(s"no scale-target stage '$stageName' — " +
-          "see ExtensionSupport.scaleTargetStages"))
+      if (sys.env.get("GRAFT_PROBE_EXPLAIN").contains("1"))
+        stage.raw(spark, dir).explain("formatted")
       for (rep <- 1 to reps) {
-        graft.ext.Stages.evict(spark, s"$dir|$stageName")
+        stage.evict(spark, dir)
         Thread.sleep(1000) // drain listener bus before reset
         probe.synchronized { durs.clear(); shuf = 0; gcMs = 0 }
         val t0 = System.nanoTime()
-        val rows = build().count()
+        val rows = stage(spark, dir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(1000) // let async task-end events land
         val (n, sum, max) = probe.synchronized {
           (durs.length, durs.sum / 1000.0,
             if (durs.isEmpty) 0.0 else durs.max / 1000.0)
         }
-        println(f"[stageprobe] $dir $stageName rep $rep: " +
+        println(f"[stageprobe] $dir ${stage.name} rep $rep: " +
           f"wall=$wall%.2f s tasks=$n sum=$sum%.1f max=$max%.2f " +
           f"gc=${gcMs / 1000.0}%.1f shufRead=${shuf / (1024.0 * 1024)}%.1f MiB " +
           f"rows=$rows")

@@ -180,6 +180,16 @@ class ExtSpec extends SparkSpec {
     assert(row.n_sampled_1hz >= 0L)
   }
 
+  /** Ids of the checkpoint RDDs behind a stage frame, and of every
+    * RDD the block manager still holds.
+    */
+  private def checkpointRdds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+  private def heldRdds: Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
   test("Stages: build-once, fingerprint swap, evict-rebuild, and " +
       "checkpoint-backed results") {
     import graft.ext.Stages
@@ -203,11 +213,39 @@ class ExtSpec extends SparkSpec {
     assert(builds.get() === 2, "fingerprint change must rebuild")
     assert(c.as[(Long, String)].collect().toSet ===
       Set(1L -> "v2", 2L -> "v2"))
+    assert(checkpointRdds(a).nonEmpty &&
+      !checkpointRdds(a).exists(heldRdds),
+      "the swap must free the stale checkpoint's blocks")
     // evict: next call rebuilds even at the same fingerprint
     Stages.evict(spark, name)
-    Stages.stage(spark, name, fingerprint = 2L)(build("v3"))
+    val d = Stages.stage(spark, name, fingerprint = 2L)(build("v3"))
     assert(builds.get() === 3, "evict must force a rebuild")
+    val held = checkpointRdds(d)
+    assert(held.nonEmpty && held.forall(heldRdds))
+    // eviction frees the checkpoint at once, not at the next GC
     Stages.evict(spark, name)
+    assert(!held.exists(heldRdds),
+      "evict must unpersist the stage's checkpoint RDD")
+  }
+
+  test("stage table: prebuildStages times every table stage in order " +
+      "plus the two driver-side caches; evictStages frees them all") {
+    import graft.queries.ExtensionQueries
+    val dir = "/root/testdata/sf0.001"
+    val table = ExtensionQueries.stageTable
+    val names = table.map(_.name)
+    assert(names.distinct === names)
+    val built = ExtensionQueries.prebuildStages(spark, dir).map(_._1)
+    assert(built === names ++ Seq("incr_bloom", "bucketed_layout"))
+    // the hierarchy dimension is timed on its own, ahead of the spine
+    // that reads it
+    assert(built.indexOf("i2b2_hier_last") < built.indexOf("i2b2_spine"))
+    val ids = table.flatMap(d => checkpointRdds(d(spark, dir)))
+    assert(ids.size === table.size && ids.forall(heldRdds),
+      "every stage frame must be one held checkpoint")
+    ExtensionQueries.evictStages(spark, dir)
+    assert(ids.filter(heldRdds).isEmpty,
+      "evictStages left stage checkpoints behind")
   }
 
   test("shingleHashes: the fused kernel matches the declarative " +
@@ -345,78 +383,6 @@ class ExtSpec extends SparkSpec {
           assert(sk.contains(item),
             s"heavy hitter $item (n=$ex) missing at parts=$parts")
       }
-    }
-  }
-
-  test("Stages disk tier: artifact survives eviction (new-process " +
-      "warm read), fingerprint change invalidates the disk copy, and " +
-      "empty frames round-trip") {
-    import graft.ext.Stages
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-stages-spec").toFile
-    val prev = sys.props.get("graft.stage.dir")
-    System.setProperty("graft.stage.dir", root.getPath)
-    try {
-      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-      def build(tag: String) = {
-        builds.incrementAndGet()
-        Seq((1L, tag), (2L, tag)).toDF("id", "tag")
-      }
-      val name = s"extspec-disk-${System.nanoTime()}"
-      val a = Stages.stage(spark, name, fingerprint = 1L)(build("v1"))
-      assert(a.as[(Long, String)].collect().toSet ===
-        Set(1L -> "v1", 2L -> "v1"))
-      assert(builds.get() === 1)
-      // evict simulates a NEW process: the memo cell is gone, so the
-      // next call must come back from DISK without re-running build
-      Stages.evict(spark, name)
-      val b = Stages.stage(spark, name, fingerprint = 1L)(build("v2"))
-      assert(builds.get() === 1,
-        "post-evict call must read the persisted artifact, not rebuild")
-      assert(b.as[(Long, String)].collect().toSet ===
-        Set(1L -> "v1", 2L -> "v1"))
-      // changed fingerprint: rebuilds AND replaces the disk artifact
-      val c = Stages.stage(spark, name, fingerprint = 2L)(build("v3"))
-      assert(builds.get() === 2, "fingerprint change must rebuild")
-      assert(c.as[(Long, String)].collect().toSet ===
-        Set(1L -> "v3", 2L -> "v3"))
-      val dirs = root.listFiles()
-        .filter(_.getName.startsWith(name + "__fp"))
-      assert(dirs.length === 1,
-        s"stale fingerprint dir must be deleted, saw ${dirs.toSeq}")
-      // an EMPTY stage frame must round-trip (schema preserved)
-      val en = s"extspec-disk-empty-${System.nanoTime()}"
-      val e1 = Stages.stage(spark, en, fingerprint = 1L)(
-        Seq((1L, "x")).toDF("id", "t")
-          .filter(org.apache.spark.sql.functions.lit(false)))
-      assert(e1.count() === 0L)
-      assert(e1.columns.toSeq === Seq("id", "t"))
-      Stages.evict(spark, en)
-      val e2 = Stages.stage(spark, en, fingerprint = 1L)(
-        sys.error("empty artifact must be served from disk"))
-      assert(e2.count() === 0L)
-      assert(e2.columns.toSeq === Seq("id", "t"))
-      Stages.evict(spark, name); Stages.evict(spark, en)
-      // crashed-run tmp remnants are reclaimed EVEN behind a
-      // published _SUCCESS (the Staging.publishOnce discipline): a
-      // dead-pid tmp next to the published artifact must vanish on
-      // the next stage() call's fast path, a live-pid one must not
-      val deadTmp = new java.io.File(root,
-        s"${name}__fpdead.tmp-999999999-1")
-      new java.io.File(deadTmp, "part").mkdirs()
-      val liveTmp = new java.io.File(root,
-        s"${name}__fpdead.tmp-${ProcessHandle.current().pid()}-1")
-      liveTmp.mkdirs()
-      Stages.stage(spark, name, fingerprint = 2L)(build("v4"))
-      assert(builds.get() === 2,
-        "published artifact must still serve from disk")
-      assert(!deadTmp.exists(), "dead-pid stage tmp must be swept " +
-        "even when the artifact is already published")
-      assert(liveTmp.exists(), "live-pid stage tmp must survive")
-      Stages.evict(spark, name)
-    } finally prev match {
-      case Some(v) => System.setProperty("graft.stage.dir", v): Unit
-      case None => System.clearProperty("graft.stage.dir"): Unit
     }
   }
 
